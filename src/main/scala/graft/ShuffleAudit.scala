@@ -22,8 +22,11 @@ import org.apache.spark.sql.functions._
   * breach — a silent structural shuffle regression (the
   * text_substring_dedup_chars class, 43× corpus, invisible to
   * plan-shape greps for four rounds) now fails loudly. Regenerate
-  * the table with `--write-expected` after an intentional plan
-  * change (and commit the diff — the review IS the audit).
+  * the changed keys' ceilings with `--write-expected` after an
+  * intentional plan change (and commit the diff — the review IS the
+  * audit). The measured keys are MERGED into the table: every other
+  * key keeps its committed ceiling, rows of keys that no longer exist
+  * are dropped, and each row that changes is printed.
   *
   * Listener note: stage-completed events post asynchronously; the
   * counters are AtomicLongs and the harness quiesces by polling until
@@ -54,22 +57,23 @@ object ShuffleAudit {
     // disarms, loudly, on mismatch — mirroring BaselineAnchors'
     // env-match discipline.
     val sfTag = java.nio.file.Paths.get(sfDir).getFileName.toString
-    val expected: Map[String, Long] =
-      if (java.nio.file.Files.exists(expectedPath)) {
-        val lines = scala.io.Source.fromFile(expectedPath.toFile)
-          .getLines().toList
-        val stamped = lines.headOption
-          .flatMap("""sf=(\S+)""".r.findFirstMatchIn(_))
-          .map(_.group(1))
-        if (stamped.exists(_ != sfTag)) {
-          println(s"SHUFAUDIT gate DISARMED: ceilings stamped " +
-            s"sf=${stamped.get}, this run is sf=$sfTag")
-          Map.empty
-        } else lines
-          .filterNot(l => l.startsWith("#") || l.isBlank)
-          .map { l => val p = l.split("\t"); p(0) -> p(1).toLong }
-          .toMap
-      } else Map.empty
+    val tableLines =
+      if (java.nio.file.Files.exists(expectedPath))
+        scala.io.Source.fromFile(expectedPath.toFile).getLines().toList
+      else Nil
+    val otherSf = tableLines.headOption
+      .flatMap("""sf=(\S+)""".r.findFirstMatchIn(_))
+      .map(_.group(1)).filter(_ != sfTag)
+    val committed: Seq[(String, Long)] = otherSf match {
+      case Some(stamped) =>
+        println(s"SHUFAUDIT gate DISARMED: ceilings stamped " +
+          s"sf=$stamped, this run is sf=$sfTag")
+        Nil
+      case None => tableLines
+        .filterNot(l => l.startsWith("#") || l.isBlank)
+        .map { l => val p = l.split("\t"); p(0) -> p(1).toLong }
+    }
+    val expected = committed.toMap
 
     val spark = SparkSession.builder()
       .master("local[32]")
@@ -150,6 +154,12 @@ object ShuffleAudit {
         println(s"REFUSING --write-expected: ${errors.size} key(s) " +
           s"errored and would be dropped from the ceiling table: " +
           errors.mkString(","))
+      } else if (otherSf.nonEmpty && keys.size < SparkEntry.queries.size) {
+        // the committed table belongs to another sf: a subset cannot
+        // be merged into it, and replacing it would drop every other
+        // key's ceiling
+        println(s"REFUSING --write-expected: the table is stamped " +
+          s"sf=${otherSf.get}; regenerate it for sf=$sfTag with ALL keys")
       } else {
         // ceiling = 2× measured, floored at 1 MB (tiny keys jitter by
         // compression/AQE layout, never by structure)
@@ -172,12 +182,21 @@ object ShuffleAudit {
         if (raised.nonEmpty)
           println(s"CEILING-RAISE SUMMARY: ${raised.size} key(s) " +
             "raised >1.5x over the committed table")
+        // merge: a subset run keeps every other key's ceiling
+        // (ADVICE r16 #1)
+        newCaps.foreach { case (k, nv) =>
+          if (!expected.get(k).contains(nv))
+            println(s"CEILING $k ${expected.get(k).fold("(new)")(_.toString)} -> $nv")
+        }
+        val merged = (committed.map { case (k, v) => k -> newCaps.getOrElse(k, v) } ++
+            newCaps.toSeq.filterNot { case (k, _) => expected.contains(k) }.sortBy(_._1))
+          .filter { case (k, _) => SparkEntry.queries.contains(k) }
         val lines = s"# sf=$sfTag key\tmax_shuffle_bytes (2x clean-run " +
           "measured; regenerate with --write-expected)\n" +
-          newCaps.map { case (k, v) => s"$k\t$v" }.mkString("\n") + "\n"
+          merged.map { case (k, v) => s"$k\t$v" }.mkString("\n") + "\n"
         java.nio.file.Files.writeString(expectedPath, lines)
-        println(s"wrote ${measured.size} ceilings to $expectedPath " +
-          s"(sf=$sfTag)")
+        println(s"merged ${measured.size} ceilings into $expectedPath " +
+          s"(${merged.size} rows, sf=$sfTag)")
       }
     }
     println(s"SHUFAUDIT SUMMARY keys=${measured.size} " +

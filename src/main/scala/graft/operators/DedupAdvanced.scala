@@ -86,16 +86,19 @@ object DedupAdvanced {
     * the band join. The previous crossJoin(seeds) shape multiplied
     * the shingle shuffle 8× — at 100 TB that is 8 corpus-sized
     * shuffles vs one. Hash strings are "i:shingle" (r5 plan fix). */
-  /** Wide (doc_id, h0..h7) signature frame — shared by the banded
-    * join (long form below) and the band-geometry eval key. */
+  /** Wide (doc_id, n, h0..h7) signature frame — shared by the banded
+    * join (long form below) and the band-geometry eval key. n is the
+    * document's shingle-set size, counted in the same aggregation
+    * pass, so the Jaccard verify needs no separate per-doc count. */
   private def minhashWideFrom(shing: DataFrame): DataFrame = {
     val minCols = (0 until 8).map(i =>
       min(md5(concat(lit(i.toString), lit(":"), col("sh")))).as(s"h$i"))
-    shing.groupBy("doc_id").agg(minCols.head, minCols.tail: _*)
+    shing.groupBy("doc_id").agg(count(lit(1)).as("n"), minCols: _*)
   }
 
+  /** Long (doc_id, n, i, h) form of the wide signature frame. */
   private def minhashSignaturesFrom(wide: DataFrame): DataFrame =
-    wide.selectExpr("doc_id",
+    wide.selectExpr("doc_id", "n",
       "stack(8, " + (0 until 8).map(i => s"${i}L, h$i").mkString(", ") +
         ") AS (i, h)")
 
@@ -175,29 +178,31 @@ object DedupAdvanced {
     expr(s"CAST(conv(substring(md5(concat('$role', CAST(i AS STRING), " +
       s"':', w)), $start, 12), 16, 10) AS BIGINT)")
 
-  /** Run `f` with spark.sql.shuffle.partitions pinned to 8, restoring
-    * the session default after (the Streaming.withStreamShuffle shape,
-    * unified here per VERDICT r14 #4): every post-scan frame in the
-    * ICWS pipelines is ≤ doc-bigram grain, and at the session's 32
-    * partitions per-stage empty-task overhead dominates wall time.
-    * SAFE ONLY because each call site materializes its result inside
-    * the scope (eager localCheckpoint) — a lazily-returned frame
-    * would execute under the RESTORED conf. */
+  /** Run `f` with spark.sql.shuffle.partitions lowered to at most 8,
+    * restoring the session default after (the
+    * Streaming.withStreamShuffle shape, unified here per VERDICT r14
+    * #4): every post-scan frame in the ICWS pipelines is ≤ doc-bigram
+    * grain, and at the session's 32 partitions per-stage empty-task
+    * overhead dominates wall time; a session already below 8 keeps
+    * its own count. SAFE ONLY because each call site materializes its
+    * result inside the scope (eager localCheckpoint) — a
+    * lazily-returned frame would execute under the RESTORED conf. */
   private def withShuffle8[T](s: SparkSession)(f: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    s.conf.set(key, "8")
+    s.conf.set(key, math.min(8, prev.toInt).toString)
     try f finally s.conf.set(key, prev)
   }
 
-  /** Distinct band-collision candidate pairs (da < db) from a
-    * signature frame — never all-pairs. */
+  /** Distinct band-collision candidate pairs (da < db) with their
+    * shingle-set sizes (na, nb) from a signature frame — never
+    * all-pairs. */
   private def minhashCandidates(mh: DataFrame): DataFrame =
-    mh.toDF("da", "ia", "ha")
-      .join(mh.toDF("db", "ib", "hb"),
+    mh.toDF("da", "na", "ia", "ha")
+      .join(mh.toDF("db", "nb", "ib", "hb"),
         col("ia") === col("ib") && col("ha") === col("hb") &&
           col("da") < col("db"))
-      .select("da", "db").distinct()
+      .select("da", "db", "na", "nb").distinct()
 
   /** r15 (guide §2.4/§5): every consumer of the MinHash stage re-ran
     * the shingle explode per reference (signatures, sizes, and the
@@ -219,21 +224,21 @@ object DedupAdvanced {
   }
 
   private def minhashJaccardFrom(shing: DataFrame, mh: DataFrame): DataFrame = {
-    val cand = minhashCandidates(mh)
-    val sizes = shing.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = cand
+    // Every candidate shares a min-hash value and therefore a shingle
+    // (barring an md5 collision), so ni >= 1 and the inner
+    // intersection already holds every candidate pair. A left join
+    // back onto the candidates would add nothing but a second
+    // evaluation of the band self-join and its distinct. The set
+    // sizes ride the candidates (na, nb are functions of da, db, so
+    // grouping by them changes no group).
+    minhashCandidates(mh)
       .join(shing.toDF("sda", "sha"), col("sda") === col("da"))
       .join(shing.toDF("sdb", "shb"),
         col("sdb") === col("db") && col("shb") === col("sha"))
-      .groupBy("da", "db").agg(count(lit(1)).as("ni"))
-    cand.join(inter, Seq("da", "db"), "left")
-      .join(sizes.toDF("xd", "xn"), col("xd") === col("da"))
-      .join(sizes.toDF("yd", "yn"), col("yd") === col("db"))
+      .groupBy("da", "db", "na", "nb").agg(count(lit(1)).as("ni"))
       .select(col("da").as("a"), col("db").as("b"),
-        (coalesce(col("ni"), lit(0)).cast("double") /
-          (col("xn") + col("yn") - coalesce(col("ni"), lit(0)))).as("jac"),
-        coalesce(col("ni"), lit(0)).as("ni"),
-        col("xn").as("na"), col("yn").as("nb"))
+        (col("ni").cast("double") / (col("na") + col("nb") - col("ni"))).as("jac"),
+        col("ni"), col("na"), col("nb"))
   }
 
   /** URL canonicalizer, all codegen'd string ops: lowercase
@@ -378,8 +383,8 @@ object DedupAdvanced {
       val mh = minhashSignaturesFrom(minhashWideFrom(shing))
         .localCheckpoint()
       val agree = minhashCandidates(mh)
-        .join(mh.toDF("xa", "i", "ha"), col("xa") === col("da"))
-        .join(mh.toDF("xb", "ib", "hb"),
+        .join(mh.toDF("xa", "xn", "i", "ha"), col("xa") === col("da"))
+        .join(mh.toDF("xb", "yn", "ib", "hb"),
           col("xb") === col("db") && col("ib") === col("i"))
         .groupBy("da", "db")
         .agg(count(when(col("ha") === col("hb"), lit(1))).as("n_agree"))
@@ -670,7 +675,7 @@ object DedupAdvanced {
       // the two shared-shingle legs re-ran the explode before
       val shing = shingles(s, d).localCheckpoint()
       val wide = minhashWideFrom(shing).localCheckpoint(true)
-      val sizes = shing.groupBy("doc_id").agg(count(lit(1)).as("n"))
+      val sizes = wide.select("doc_id", "n")
       val shared = shing.toDF("sda", "sha")
         .join(shing.toDF("sdb", "shb"),
           col("sha") === col("shb") && col("sda") < col("sdb"))

@@ -21,8 +21,10 @@ import graft.Tables
   *     shape (map contributions / reduce by destination).
   *   - the edge⋈rank join is src-keyed; on a cluster both sides
   *     co-partition on src and the degree table rides the same join.
-  *     Identical edge subplans across the 3 unrolled iterations
-  *     dedupe via Spark's exchange reuse.
+  *     The degree-joined edge list is materialized once, so the 3
+  *     unrolled iterations read that checkpoint instead of re-running
+  *     the edge subplan (exchange reuse cannot dedupe it: see
+  *     `pagerank3`).
   *   - iterations are FIXED (3), not convergence-driven: no per-round
   *     driver action at all — the whole ranking is one lazy plan (for
   *     convergence-driven variants see Clustering.components' fused
@@ -41,27 +43,32 @@ object GraphOps {
     * Returns (node, pr) for every node.
     *
     * r15 (guide §1.2/§2.4): the degree-joined edge list is
-    * materialized ONCE. The 3 unrolled iterations each reference it,
-    * and the union-of-two-projections edge shape defeats exchange
-    * reuse (the legs' output columns differ), so the lazy form
-    * re-ran the scan → distinct → degree-join subtree per reference —
-    * 28 parquet scans of lineitem in the executed plan of
-    * graph_pagerank (plans/r15/graph_pagerank_before.txt). After: 2
-    * scans (the pair-list build), one degree join, 3 iteration
-    * shuffles — the canonical shape the Scaladoc already claimed. */
+    * materialized ONCE. The 3 unrolled iterations each reference it;
+    * the lazy form re-ran the scan → distinct → degree-join subtree
+    * per reference — 28 parquet scans of lineitem in the executed
+    * plan of graph_pagerank (plans/r15/graph_pagerank_before.txt).
+    * After: 1 scan (the pair-list build), one degree join, 3
+    * iteration shuffles.
+    *
+    * Iteration 1 is specialised: every node starts at pr = 1.0 and
+    * every edge's src is a node, so the rank join is the identity and
+    * the contribution is 1.0 / deg straight off the edge list — the
+    * same double bits as the generic round's pr / deg, without the
+    * distinct(src) aggregate and its join. Fewer distinct stage
+    * shapes also keep the key's generated classes inside Spark's
+    * codegen cache across repeated runs (PLANS.md, "Codegen working
+    * set"). */
   private[graft] def pagerank3(edges: DataFrame): DataFrame = {
     val outdeg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     val withDeg = edges.join(outdeg, "src").localCheckpoint()
-    var pr = withDeg.select(col("src").as("node")).distinct()
-      .withColumn("pr", lit(1.0))
-    for (_ <- 1 to 3) {
-      pr = withDeg.join(pr, col("src") === col("node"))
-        .select(col("dst"),
-          (col("pr") / col("deg")).cast("decimal(28,10)").as("c"))
-        .groupBy("dst")
-        .agg((lit(0.15) + lit(0.85) * sum(col("c")).cast("double")).as("pr"))
-        .select(col("dst").as("node"), col("pr"))
-    }
+    def iterate(contrib: DataFrame): DataFrame = contrib
+      .select(col("dst"), (col("pr") / col("deg")).cast("decimal(28,10)").as("c"))
+      .groupBy("dst")
+      .agg((lit(0.15) + lit(0.85) * sum(col("c")).cast("double")).as("pr"))
+      .select(col("dst").as("node"), col("pr"))
+    var pr = iterate(withDeg.withColumn("pr", lit(1.0)))
+    for (_ <- 2 to 3)
+      pr = iterate(withDeg.join(pr, col("src") === col("node")))
     // r15 #5 (session 4): END-PIN the node-grain rank frame so the
     // degree-joined edge list (~5.5 MB resident in the storage
     // census) is freed at construction — the returned plan reads the
@@ -162,14 +169,17 @@ object GraphOps {
         .select((col("l_partkey") * 2).as("pn"),
           (col("l_suppkey") * 2 + 1).as("sn"))
         .distinct()
-        .localCheckpoint() // consumed by both union legs ×2 (edges, outdeg)
-      val edges = pairs.select(col("pn").as("src"), col("sn").as("dst"))
-        .union(pairs.select(col("sn").as("src"), col("pn").as("dst")))
-      val pr = pagerank3(edges)
-      // pagerank3 materialized the degree-joined edge list; the pair
-      // list's blocks are dead from here (r15 #5)
-      graft.Ckpt.free(pairs)
-      pr
+      // both directions of each pair come out of ONE explode: a union
+      // of two projections plans every reference to the edge list as
+      // two legs. The degree join reads this lazy frame twice; the
+      // second read reuses the first one's distinct shuffle, so the
+      // pair list needs no checkpoint of its own.
+      val edges = pairs
+        .select(explode(array(
+          struct(col("pn").as("src"), col("sn").as("dst")),
+          struct(col("sn").as("src"), col("pn").as("dst")))).as("e"))
+        .select(col("e.src"), col("e.dst"))
+      pagerank3(edges)
         .select(col("node"),
           when(col("node") % 2 === 0, lit("part"))
             .otherwise(lit("supplier")).as("kind"),

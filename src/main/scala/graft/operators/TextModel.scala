@@ -190,16 +190,20 @@ object TextModel {
       val sym0 = words.select(col("f"),
         trim(regexp_replace(col("w"), "(.)", "$1 ")).as("sy"))
         .localCheckpoint()
+      // The pair index comes from an explode of sequence(...) rather
+      // than a transform lambda: lambdas are interpreted, which splits
+      // the scan and the partial aggregate into two generated stages.
       def pairCounts(sym: DataFrame): DataFrame = sym
-        .select(col("f"), explode(expr(
-          """transform(sequence(1, size(split(sy, ' ')) - 1), i ->
-               concat(element_at(split(sy, ' '), i), ' ',
-                      element_at(split(sy, ' '), i + 1)))""")).as("pair"))
+        .select(col("f"), split(col("sy"), " ").as("s"))
+        .select(col("f"), col("s"),
+          explode(sequence(lit(1), size(col("s")) - 1)).as("i"))
+        .select(col("f"), concat(element_at(col("s"), col("i")), lit(" "),
+          element_at(col("s"), col("i") + 1)).as("pair"))
         .groupBy("pair").agg(sum(col("f")).as("wt"))
-      def top1(pc: DataFrame): DataFrame = pc
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(lit(1)).orderBy(col("wt").desc, col("pair"))))
-        .filter(col("rn") === 1).select(col("pair"), col("wt"))
+      // `pair` is unique after the count, so (wt desc, pair) is a
+      // total order and its first row is the one rank-1 pick.
+      def top1(pc: DataFrame): DataFrame =
+        pc.orderBy(col("wt").desc, col("pair")).limit(1)
       def applyMerge(sym: DataFrame, m: DataFrame): DataFrame = sym
         .crossJoin(broadcast(m)) // 1-row merge pick
         .select(col("f"), expr(
@@ -222,6 +226,7 @@ object TextModel {
         .unionByName(m2.select(lit("merge2").as("stage"),
           lit(1L).as("rank"), col("pair"), col("wt")))
         .unionByName(remaining)
+        .coalesce(1) // ≤ 12 rows: sort in one task, no range shuffle
         .orderBy("stage", "rank")
     }),
 

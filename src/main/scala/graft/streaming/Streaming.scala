@@ -61,15 +61,16 @@ object Streaming {
     * partitioned by `spark.sql.shuffle.partitions` AT QUERY START, and
     * every micro-batch pays one state-store open/commit per partition:
     * at local[32] that is 32 store instances + checkpoint files per
-    * batch for kilobytes of state — pure fixed overhead. 8 partitions
-    * keeps the commit cost bounded; on a real cluster this knob is
-    * sized to state volume (state rows / partition ≈ store block), not
-    * to core count. Restored after the stream drains so batch queries
-    * keep the session default. */
+    * batch for kilobytes of state — pure fixed overhead. At most 8
+    * partitions keeps the commit cost bounded; a session already
+    * below 8 keeps its own count (raising it would only add stores).
+    * On a real cluster this knob is sized to state volume (state rows
+    * / partition ≈ store block), not to core count. Restored after the
+    * stream drains so batch queries keep the session default. */
   private def withStreamShuffle[T](s: SparkSession)(f: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    s.conf.set(key, "8")
+    s.conf.set(key, math.min(8, prev.toInt).toString)
     try f finally s.conf.set(key, prev)
   }
 
