@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.SessionConf.withShufflePartitionsAtMost
 
 /** Near-duplicate detection for a training-data pipeline — the
   * operators a 100 TB LLM-data curation job runs on top of the exact
@@ -177,22 +178,6 @@ object DedupAdvanced {
   private def u48c(role: String, start: Int): Column =
     expr(s"CAST(conv(substring(md5(concat('$role', CAST(i AS STRING), " +
       s"':', w)), $start, 12), 16, 10) AS BIGINT)")
-
-  /** Run `f` with spark.sql.shuffle.partitions lowered to at most 8,
-    * restoring the session default after (the
-    * Streaming.withStreamShuffle shape, unified here per VERDICT r14
-    * #4): every post-scan frame in the ICWS pipelines is ≤ doc-bigram
-    * grain, and at the session's 32 partitions per-stage empty-task
-    * overhead dominates wall time; a session already below 8 keeps
-    * its own count. SAFE ONLY because each call site materializes its
-    * result inside the scope (eager localCheckpoint) — a
-    * lazily-returned frame would execute under the RESTORED conf. */
-  private def withShuffle8[T](s: SparkSession)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, math.min(8, prev.toInt).toString)
-    try f finally s.conf.set(key, prev)
-  }
 
   /** Distinct band-collision candidate pairs (da < db) with their
     * shingle-set sizes (na, nb) from a signature frame — never
@@ -416,12 +401,13 @@ object DedupAdvanced {
     // estimate vs exact J_w, with the absolute error — the
     // estimate-quality harness shape, oracle-checked end to end.
     "dedup_minhash_icws" -> ((s, d) => {
-      // The whole pipeline runs at 8 shuffle partitions (the scoped
-      // withShuffle8 helper — see its scaladoc for the
-      // materialize-inside-the-scope contract); the final
-      // localCheckpoint materializes inside the scope so nothing
-      // escapes the conf restore.
-      withShuffle8(s) {
+      // The whole pipeline runs at ≤ 8 shuffle partitions: every
+      // post-scan frame is ≤ doc-bigram grain, and at the session's 32
+      // partitions per-stage empty-task overhead dominates wall time.
+      // The final localCheckpoint materializes inside the scope, so
+      // nothing escapes the conf restore (a lazily-returned frame
+      // would execute under the RESTORED conf).
+      withShufflePartitionsAtMost(s, 8) {
       // tf feeds the signature build, the doc totals AND the pair
       // intersections; sig feeds the bands and the agreement count;
       // cand feeds three joins. Checkpoint each once (the MMR/greedy
@@ -488,7 +474,7 @@ object DedupAdvanced {
     // recall at fixed J_w. At sf0.01 no pair reaches 0.5 (max J_w
     // 0.10) → recall NULL, candidate counts still differentiate the
     // geometries; sf0.001/0.1 have real weighted near-dups.
-    "dedup_icws_band_eval" -> ((s, d) => withShuffle8(s) {
+    "dedup_icws_band_eval" -> ((s, d) => withShufflePartitionsAtMost(s, 8) {
       val tf = wordTf(s, d).localCheckpoint()
       val sig = icwsWide(tf).localCheckpoint()
       val tot = tf.groupBy("doc_id").agg(sum("tf").as("n"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.SessionConf.withConf
 
 /** Subquery and reshaping operators (round-3 extensions): scalar
   * subqueries, correlated EXISTS (Catalyst decorrelates both —
@@ -123,9 +124,7 @@ object Subqueries {
       val ordv = Tables.orders(s, d).select(col("o_totalprice"))
         .localCheckpoint(true)
       ordv.createOrReplaceTempView("graft_orders_v")
-      val prev = s.conf.getOption("spark.sql.scripting.enabled")
-      s.conf.set("spark.sql.scripting.enabled", "true")
-      try {
+      withConf(s, "spark.sql.scripting.enabled" -> "true") {
         val res = s.sql(
           """BEGIN
             |  DECLARE k INT DEFAULT 0;
@@ -143,9 +142,6 @@ object Subqueries {
         // above; the one-column view block is dead from here (r15 #5)
         graft.Ckpt.free(ordv)
         res
-      } finally prev match {
-        case Some(v) => s.conf.set("spark.sql.scripting.enabled", v)
-        case None => s.conf.unset("spark.sql.scripting.enabled")
       }
     }),
 

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import graft.Tables
+import graft.SessionConf.withConf
 
 /** The staging pipeline surface (SURVEY.md §2.1) — the reference's
   * identity: multi-format ingest with declared schemas, corrupt-record
@@ -91,15 +92,12 @@ object Staging {
     "stage_idempotent_rewrite" -> ((s, d) => {
       val out = tmpDir("idempotent_stage")
       val ev = Tables.events(s, d).withColumn("day", to_date(col("ts")))
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = s.conf.get(key, "STATIC")
-      s.conf.set(key, "dynamic")
-      try {
+      withConf(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
         ev.write.mode("overwrite").partitionBy("day").parquet(out)
         val day0 = ev.select(min(col("day"))).collect()(0).getDate(0)
         ev.filter(col("day") === lit(day0)) // the re-delivered batch
           .write.mode("overwrite").partitionBy("day").parquet(out)
-      } finally s.conf.set(key, prev)
+      }
       s.read.parquet(out).groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           round(sum(col("value").cast("decimal(18,2)")).cast("double"), 4)
@@ -181,15 +179,10 @@ object Staging {
       val o = Tables.orders(s, d)
         .withColumn("yr", year(col("o_orderdate")))
       o.write.mode("overwrite").partitionBy("yr").parquet(out)
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "dynamic")
-      try o.filter(col("yr") % 2 === 0
-          && col("o_orderpriority") === "1-URGENT")
-        .write.mode("overwrite").partitionBy("yr").parquet(out)
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None    => s.conf.unset(key)
+      withConf(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+        o.filter(col("yr") % 2 === 0
+            && col("o_orderpriority") === "1-URGENT")
+          .write.mode("overwrite").partitionBy("yr").parquet(out)
       }
       s.read.parquet(out)
         .groupBy("yr")

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import graft.Tables
+import graft.SessionConf.{withConf, withShufflePartitionsAtMost}
 
 /** Structured-Streaming operators (SURVEY.md §2.9).
   *
@@ -57,7 +58,7 @@ object Streaming {
     Tables.normalizeEventsTs(capped.parquet(s"$d/events.*"))
   }
 
-  /** Run a stream with few shuffle partitions. Streaming state is
+  /** Shuffle-partition ceiling for streams. Streaming state is
     * partitioned by `spark.sql.shuffle.partitions` AT QUERY START, and
     * every micro-batch pays one state-store open/commit per partition:
     * at local[32] that is 32 store instances + checkpoint files per
@@ -65,19 +66,14 @@ object Streaming {
     * partitions keeps the commit cost bounded; a session already
     * below 8 keeps its own count (raising it would only add stores).
     * On a real cluster this knob is sized to state volume (state rows
-    * / partition ≈ store block), not to core count. Restored after the
-    * stream drains so batch queries keep the session default. */
-  private def withStreamShuffle[T](s: SparkSession)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, math.min(8, prev.toInt).toString)
-    try f finally s.conf.set(key, prev)
-  }
+    * / partition ≈ store block), not to core count. Scoped to the
+    * stream's run, so batch queries keep the session default. */
+  private val StreamShufflePartitions = 8
 
   /** Drain a streaming DataFrame into a memory sink and return the
     * sink contents as a batch DataFrame. */
   private def drain(sdf: DataFrame, mode: String): DataFrame =
-    withStreamShuffle(sdf.sparkSession) {
+    withShufflePartitionsAtMost(sdf.sparkSession, StreamShufflePartitions) {
       val name = "graft_sink_" + sinkId.incrementAndGet()
       val q = sdf.writeStream.format("memory").queryName(name)
         .outputMode(mode).trigger(Trigger.AvailableNow()).start()
@@ -133,11 +129,8 @@ object Streaming {
     // typed state cells, TTL support, timers). Update-mode drain +
     // final max per key = the end state; batch SQL is the oracle.
     "stream_transform_with_state" -> ((s, d) => {
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(provKey)
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
         import s.implicits._
         val ds = eventsStream(s, d)
           .select(col("user_id"), unix_micros(col("ts")).as("us"))
@@ -151,9 +144,6 @@ object Streaming {
           .groupBy("user_id")
           .agg(max(col("n")).as("n"), max(col("last_us")).as("last_us"))
           .orderBy("user_id")
-      } finally prev match {
-        case Some(p) => s.conf.set(provKey, p)
-        case None => s.conf.unset(provKey)
       }
     }),
 
@@ -234,7 +224,7 @@ object Streaming {
           expr("CAST(conv(substring(md5(w), 1, 2), 16, 10) AS BIGINT)")
             .as("dim"))
         .groupBy("cid", "dim").agg(count(lit(1)).as("c"))
-      withStreamShuffle(s) {
+      withShufflePartitionsAtMost(s, StreamShufflePartitions) {
         val q = s.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", "1").parquet(s"$src/*.parquet")
           .writeStream
@@ -665,7 +655,7 @@ object Streaming {
       val quar = graft.sources.Staging.tmpDir("qgate_quar")
       Tables.documents(s, d).repartition(2)
         .write.mode("overwrite").parquet(src)
-      withStreamShuffle(s) {
+      withShufflePartitionsAtMost(s, StreamShufflePartitions) {
         val schema = s.read.parquet(src).schema
         val q = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(src)
@@ -713,7 +703,7 @@ object Streaming {
       val snapRoot = graft.sources.Staging.tmpDir("cdc_snap")
       Tables.events(s, d).filter(col("user_id") % 5 === 0)
         .repartition(3).write.mode("overwrite").parquet(src)
-      withStreamShuffle(s) {
+      withShufflePartitionsAtMost(s, StreamShufflePartitions) {
         val schema = s.read.parquet(src).schema
         var version = 0 // driver-held head pointer (the manifest role)
         val q = s.readStream.schema(schema)
@@ -760,7 +750,7 @@ object Streaming {
       // re-stage the fixture as 4 files with the ts already µs-typed
       Tables.events(s, d).repartition(4)
         .write.mode("overwrite").parquet(src)
-      withStreamShuffle(s) {
+      withShufflePartitionsAtMost(s, StreamShufflePartitions) {
         val schema = s.read.parquet(src).schema
         val q = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(src)
@@ -806,7 +796,7 @@ object Streaming {
       val out = graft.sources.Staging.tmpDir("ckpt_out")
       val ck = graft.sources.Staging.tmpDir("ckpt_meta")
       val ev = Tables.events(s, d)
-      def run(): Unit = withStreamShuffle(s) {
+      def run(): Unit = withShufflePartitionsAtMost(s, StreamShufflePartitions) {
         val schema = s.read.parquet(src).schema
         val q = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(src)
@@ -844,7 +834,7 @@ object Streaming {
       // fixed, pre-cleaned scratch dir — append-mode writes must not
       // accumulate across runs (and /tmp must not fill up over rounds)
       val out = graft.sources.Staging.tmpDir("stage")
-      withStreamShuffle(s) {
+      withShufflePartitionsAtMost(s, StreamShufflePartitions) {
         val q = eventsStream(s, d).writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
             batch

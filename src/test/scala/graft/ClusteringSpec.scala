@@ -47,10 +47,10 @@ class ClusteringSpec extends GraftSuite {
       s"components differ: got=${got.toSeq.sorted} expected=${expected.toSeq.sorted}")
   }
 
-  test("componentsStar (large-star/small-star A/B) equals label propagation") {
-    // the GRAFT_CC_ALGO=star alternative (a documented local-perf
-    // negative, kept for edge-heavy graphs) must stay label-identical
-    // to the default loop — this pins it against rot
+  test("Clustering.components per-node labels equal the driver-side union-find") {
+    // the declared key only reports per-cluster sizes; this pins the
+    // label of EVERY node (min reachable id), so a loop that merged the
+    // right sizes under the wrong representative would fail here
     graft.functions.GraftFunctions.register(spark)
     val sample = Tables.embeddings(spark, sf)
       .filter(col("vec_id") % 5 === 0)
@@ -59,12 +59,11 @@ class ClusteringSpec extends GraftSuite {
     val pairs = graft.operators.MirroredLsh.candidates(sample)
       .filter(col("cos") >= 0.3)
       .select(col("a"), col("b"))
-    val viaStar = Clustering.componentsStar(verts, pairs)
+    val got = Clustering.components(verts, pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaProp = Clustering.components(verts, pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaStar == viaProp,
-      s"star and label-prop disagree on ${viaStar.toSet.diff(viaProp.toSet).take(5)}")
+    val expected = bruteComponents()
+    assert(got == expected,
+      s"labels differ on ${got.toSet.diff(expected.toSet).take(5)}")
   }
 
   test("dedup_cluster_cc covers every sampled node exactly once") {
